@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-round benchmark: headline sf-scaling queries, one warmup pass
   * (JIT + codegen + broadcast build amortized out, the steady-state a
   * long-lived cluster job actually runs at) then MULTIPLE timed passes,
@@ -126,16 +124,7 @@ object Bench {
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).toSet)
     val bench = headline.filter(n => only.forall(_.contains(n)))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build()
 
     def run(name: String): Double = {
       // label the jobs (guide §1.5) so an event log / UI of a bench run
@@ -280,7 +269,7 @@ object Bench {
           (if (jobs.nonEmpty) s""""jobs":${jsonMap(jobs)},""" else "")
       else ""
     val fullLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","cpus":$cpus,"warmup":${jsonMap(warmup)},"passes":$passesJson,$tier2Json"queries":${jsonMap(best)}}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","cpus":${GraftSession.cpus},"warmup":${jsonMap(warmup)},"passes":$passesJson,$tier2Json"queries":${jsonMap(best)}}"""
     try java.nio.file.Files.write(
       java.nio.file.Paths.get("BENCH_FULL.json"),
       (fullLine + "\n").getBytes("UTF-8"))
@@ -302,7 +291,7 @@ object Bench {
     // check can tell "env var ignored" from "overhead-bound at this
     // sf" straight from the output (round-14 verdict ask #2)
     val line =
-      s"""{"metric":"total","value":$totalStr,"unit":"sec","sf":"$sfDir","cpus":$cpus,${tier2TotalJson}"full":"BENCH_FULL.json","queries":${jsonMap(compact)}}"""
+      s"""{"metric":"total","value":$totalStr,"unit":"sec","sf":"$sfDir","cpus":${GraftSession.cpus},${tier2TotalJson}"full":"BENCH_FULL.json","queries":${jsonMap(compact)}}"""
     if (line.length > 1900)
       System.err.println(s"[bench] stdout line ${line.length} chars — " +
         "nearing the driver's 2000-char tail; trim the headline set")

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.GraftFunctions
 import graft.sinks.DbSink
 import graft.sources.{PedSource, VcfReader}
 
@@ -99,7 +98,6 @@ object Vcf2Db {
       sortedOutput: Int = 0, jdbcUrl: Option[String] = None,
       jdbcBatchSize: Int = 10000, passOnly: Boolean = false): Unit = {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val (header, rawVariants, rawImpacts) = VcfReader.fromPath(spark, vcfPath)
     // the reference's --passonly: records whose FILTER failed never
     // enter the database (PASS or missing '.' survive). A per-row
@@ -251,7 +249,6 @@ object GraftDb {
     */
   def expandGenotypes(spark: SparkSession, dir: String,
       codec: String = "auto"): DataFrame = {
-    GraftFunctions.register(spark)
     // "auto" (the default everywhere on the read side) resolves from
     // the codec marker the writer recorded in vcf_header
     val resolved = resolveCodec(spark, dir, codec)
@@ -473,7 +470,6 @@ object GraftDb {
   def exportVcf(spark: SparkSession, dir: String, outDir: String,
       shards: Int = 1, codec: String = "auto"): Unit = {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val rawHeader = vcfHeader(spark, dir).orderBy("line_no")
       .select("line").collect().map(_.getString(0)).toVector
       .filterNot(_.startsWith("##graft_blob_codec="))

@@ -2,7 +2,9 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Session factory with the settings every graft job wants.
+/** The one session factory, with the settings every graft job wants:
+  * it installs graft's native SQL functions (`GraftExtensions`) and
+  * sizes local mode from `SPARK_GRAFT_CPUS`.
   *
   * Scale notes: AQE handles runtime skew-join splitting and shuffle
   * coalescing; shuffle partitions default to the local core count here
@@ -10,7 +12,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * cluster.
   */
 object GraftSession {
-  def build(master: String = "local[32]", shufflePartitions: Int = 32): SparkSession = {
+  /** Local core count: `SPARK_GRAFT_CPUS`, parsed once. */
+  lazy val cpus: Int = parseCpus(sys.env.get("SPARK_GRAFT_CPUS"))
+
+  /** Unset or `*` means every available processor; any other value must
+    * be a positive integer.
+    */
+  private[graft] def parseCpus(v: Option[String]): Int = v match {
+    case None | Some("*") => Runtime.getRuntime.availableProcessors
+    case Some(s) => s.toIntOption.filter(_ > 0).getOrElse(
+      throw new IllegalArgumentException(
+        s"SPARK_GRAFT_CPUS must be a positive integer or '*', got '$s'"))
+  }
+
+  def build(master: String = s"local[$cpus]", shufflePartitions: Int = cpus): SparkSession = {
     val spark = SparkSession
       .builder()
       .master(master)
@@ -45,8 +60,4 @@ object Tables {
         org.apache.spark.sql.functions.expr("ts div 1000")))
     else df
   }
-
-  /** Session config required to read the testdata (nanos timestamps). */
-  val readConf: Map[String, String] =
-    Map("spark.sql.legacy.parquet.nanosAsLong" -> "true")
 }

@@ -1,7 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -766,17 +768,27 @@ case class BloomContainsTag(bf: Expression, value: Expression,
     copy(bf = newChildren(0), value = newChildren(1), shard = newChildren(2))
 }
 
-/** Registers the custom expressions as SQL functions so both the
-  * DataFrame API (`expr("simhash64(t)")`) and `spark.sql` can use them —
-  * native Catalyst expressions, codegen-friendly, no UDF boxing.
+/** graft's native SQL functions: one table, installed two ways.
+  * `GraftExtensions` injects every entry at session build time (what
+  * `GraftSession` and `spark.sql.extensions` use); `register` adds the
+  * missing entries to a session built without the extension. Both the
+  * DataFrame API (`expr("simhash64(t)")`) and `spark.sql` then resolve
+  * them as native Catalyst expressions — codegen-friendly, no UDF boxing.
   */
 object GraftFunctions {
-  /** Shared by register() and GraftExtensions — the literal-n extraction
-    * must stay identical in both registration paths. n must be a
-    * non-null foldable integer; anything else gets a clear resolution
-    * error, not an internal NPE / "Cannot evaluate" stack trace.
+  /** One SQL function: its name, expression class and usage string (the
+    * `DESCRIBE FUNCTION` text) and the builder from its argument list.
     */
-  private[functions] val shinglesBuilder: Seq[Expression] => Expression = { es =>
+  final case class Entry(name: String, clazz: Class[_], usage: String,
+      builder: Seq[Expression] => Expression) {
+    def id: FunctionIdentifier = FunctionIdentifier(name)
+    def info: ExpressionInfo = new ExpressionInfo(clazz.getName, null, name, usage, "")
+  }
+
+  /** n must be a non-null foldable integer; anything else gets a clear
+    * resolution error, not an internal NPE / "Cannot evaluate" stack trace.
+    */
+  private val shinglesBuilder: Seq[Expression] => Expression = { es =>
     require(es.length == 2, "shingles(array<string>, n) takes exactly 2 arguments")
     val n = es(1) match {
       // integral literals only — Number.intValue would silently
@@ -793,40 +805,11 @@ object GraftFunctions {
       "shingles: n must be a non-null integer literal")))
   }
 
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    // Skip names already present: createOrReplaceTempFunction WARNs on
-    // every replacement, and register() is called at the top of every
-    // operator — one bench/driver run otherwise tails ~40 noise lines.
-    // The builders are deterministic, so first registration wins safely.
-    def add(name: String, b: Seq[Expression] => Expression): Unit =
-      if (!reg.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(name)))
-        reg.createOrReplaceTempFunction(name, b, "built-in")
-    add("zlib_pack", es => ZlibPack(es.head))
-    add("zlib_unpack", es => ZlibUnpack(es.head))
-    add("zlib_pack_str", es => ZlibPackStr(es.head))
-    add("zlib_unpack_str", es => ZlibUnpackStr(es.head))
-    add("snappy_pack", es => SnappyPack(es.head))
-    add("snappy_unpack", es => SnappyUnpack(es.head))
-    add("vec_dot", es => VecDot(es(0), es(1)))
-    add("minhash_sig", es => MinHashSig(es.head))
-    add("shingles", shinglesBuilder)
-    add("simhash64", es => SimHash64(es.head))
-    add("rolling_minhash", es => RollingMinHash(es.head))
-    add("mds_pairs", es => MdsPairs(es.head))
-    add("sig_eq_count", es => SigEqCount(es(0), es(1)))
-    add("bloom_agg", GraftFunctions.bloomAggBuilder)
-    add("bloom_contains", es =>
-      org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(es(0), es(1)))
-    add("bloom_contains_tag", bloomContainsTagBuilder)
-    add("bpe_count", es => BpeCount(es(0), es(1)))
-  }
-
-  /** Shared by register() and GraftExtensions: the tag must be a
-    * non-null foldable string (a plan-construction-unique UUID), pulled
-    * out at build time so the cache key needs no per-row evaluation.
+  /** The tag must be a non-null foldable string (a plan-construction-
+    * unique UUID), pulled out at build time so the cache key needs no
+    * per-row evaluation.
     */
-  private[functions] val bloomContainsTagBuilder: Seq[Expression] => Expression = { es =>
+  private val bloomContainsTagBuilder: Seq[Expression] => Expression = { es =>
     require(es.length == 4,
       "bloom_contains_tag(bf, value, shard, tag) takes exactly 4 arguments")
     val tag = es(3) match {
@@ -848,14 +831,76 @@ object GraftFunctions {
     * engine's own filter beats hand-rolling one: same serialized form
     * AQE uses, tested split/merge, no extra dependency.
     */
-  val bloomAggBuilder: Seq[Expression] => Expression = {
-    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-    es => es match {
-      case Seq(c) => new BloomFilterAggregate(c)
-      case Seq(c, n) => new BloomFilterAggregate(c, n)
-      case Seq(c, n, b) => new BloomFilterAggregate(c, n, b)
-      case _ => throw new IllegalArgumentException(
-        "bloom_agg(child[, estimatedItems[, numBits]])")
+  private val bloomAggBuilder: Seq[Expression] => Expression = {
+    case Seq(c) => new BloomFilterAggregate(c)
+    case Seq(c, n) => new BloomFilterAggregate(c, n)
+    case Seq(c, n, b) => new BloomFilterAggregate(c, n, b)
+    case _ => throw new IllegalArgumentException(
+      "bloom_agg(child[, estimatedItems[, numBits]])")
+  }
+
+  val table: Seq[Entry] = Seq(
+    Entry("zlib_pack", classOf[ZlibPack],
+      "zlib_pack(array<int>) - zlib-compressed LE int32 bytes",
+      es => ZlibPack(es.head)),
+    Entry("zlib_unpack", classOf[ZlibUnpack],
+      "zlib_unpack(binary) - inverse of zlib_pack",
+      es => ZlibUnpack(es.head)),
+    Entry("zlib_pack_str", classOf[ZlibPackStr],
+      "zlib_pack_str(array<string>) - zlib-compressed NUL-terminated strings",
+      es => ZlibPackStr(es.head)),
+    Entry("zlib_unpack_str", classOf[ZlibUnpackStr],
+      "zlib_unpack_str(binary) - inverse of zlib_pack_str",
+      es => ZlibUnpackStr(es.head)),
+    Entry("snappy_pack", classOf[SnappyPack],
+      "snappy_pack(array<int>) - snappy-compressed LE int32 bytes",
+      es => SnappyPack(es.head)),
+    Entry("snappy_unpack", classOf[SnappyUnpack],
+      "snappy_unpack(binary) - inverse of snappy_pack",
+      es => SnappyUnpack(es.head)),
+    Entry("shingles", classOf[WordShingles],
+      "shingles(array<string>, n) - distinct space-joined word n-grams",
+      shinglesBuilder),
+    Entry("minhash_sig", classOf[MinHashSig],
+      "minhash_sig(array<string>) - 64-lane MinHash signature (xxhash64 seed 42)",
+      es => MinHashSig(es.head)),
+    Entry("vec_dot", classOf[VecDot],
+      "vec_dot(array<float|double>, array<float|double>) - sequential-fold dot product",
+      es => VecDot(es(0), es(1))),
+    Entry("simhash64", classOf[SimHash64],
+      "simhash64(array<string>) - 64-bit SimHash of a token bag",
+      es => SimHash64(es.head)),
+    Entry("rolling_minhash", classOf[RollingMinHash],
+      "rolling_minhash(string) - winnowing min rolling-window hash",
+      es => RollingMinHash(es.head)),
+    Entry("mds_pairs", classOf[MdsPairs],
+      "mds_pairs(array<int>) - packed co-called pairs with squared copy diffs",
+      es => MdsPairs(es.head)),
+    Entry("sig_eq_count", classOf[SigEqCount],
+      "sig_eq_count(array<bigint>, array<bigint>) - equal MinHash lanes",
+      es => SigEqCount(es(0), es(1))),
+    Entry("bloom_agg", classOf[BloomFilterAggregate],
+      "bloom_agg(xxhash64-long[, items[, bits]]) - Spark bloom filter build",
+      bloomAggBuilder),
+    Entry("bloom_contains", classOf[BloomFilterMightContain],
+      "bloom_contains(binary, xxhash64-long) - bloom membership probe",
+      es => BloomFilterMightContain(es(0), es(1))),
+    Entry("bloom_contains_tag", classOf[BloomContainsTag],
+      "bloom_contains_tag(bf-col, xxhash64-long, shard, 'tag') - " +
+        "sharded bloom probe (filter as a column, cached per (tag, shard))",
+      bloomContainsTagBuilder),
+    Entry("bpe_count", classOf[BpeCount],
+      "bpe_count(string, merges_path) - exact byte-level BPE token count",
+      es => BpeCount(es(0), es(1))))
+
+  /** Installs the table on a session built without `GraftExtensions`.
+    * Names already present are skipped, so a second call (or a call on a
+    * session the extension already populated) changes nothing.
+    */
+  def register(spark: SparkSession): Unit = {
+    val reg = spark.sessionState.functionRegistry
+    table.foreach { e =>
+      if (!reg.functionExists(e.id)) reg.registerFunction(e.id, e.info, e.builder)
     }
   }
 }

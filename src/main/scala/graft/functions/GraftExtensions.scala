@@ -1,77 +1,14 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** SparkSessionExtensions hook: installs graft's native expressions at
-  * session build time (`.withExtensions(new GraftExtensions)` — see
-  * GraftSession), so `spark-submit --conf
+/** SparkSessionExtensions hook: installs every `GraftFunctions.table`
+  * entry at session build time (`.withExtensions(new GraftExtensions)`
+  * — see GraftSession), so `spark-submit --conf
   * spark.sql.extensions=graft.functions.GraftExtensions` works on a
   * real cluster with no driver-side registration call.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    def inject(name: String, clazz: Class[_], usage: String,
-        b: Seq[Expression] => Expression): Unit =
-      ext.injectFunction((
-        FunctionIdentifier(name),
-        new ExpressionInfo(clazz.getName, null, name, usage, ""),
-        b))
-    inject("zlib_pack", classOf[ZlibPack],
-      "zlib_pack(array<int>) - zlib-compressed LE int32 bytes",
-      es => ZlibPack(es.head))
-    inject("zlib_unpack", classOf[ZlibUnpack],
-      "zlib_unpack(binary) - inverse of zlib_pack",
-      es => ZlibUnpack(es.head))
-    inject("zlib_pack_str", classOf[ZlibPackStr],
-      "zlib_pack_str(array<string>) - zlib-compressed NUL-terminated strings",
-      es => ZlibPackStr(es.head))
-    inject("zlib_unpack_str", classOf[ZlibUnpackStr],
-      "zlib_unpack_str(binary) - inverse of zlib_pack_str",
-      es => ZlibUnpackStr(es.head))
-    inject("snappy_pack", classOf[SnappyPack],
-      "snappy_pack(array<int>) - snappy-compressed LE int32 bytes",
-      es => SnappyPack(es.head))
-    inject("snappy_unpack", classOf[SnappyUnpack],
-      "snappy_unpack(binary) - inverse of snappy_pack",
-      es => SnappyUnpack(es.head))
-    inject("shingles", classOf[WordShingles],
-      "shingles(array<string>, n) - distinct space-joined word n-grams",
-      GraftFunctions.shinglesBuilder)
-    inject("minhash_sig", classOf[MinHashSig],
-      "minhash_sig(array<string>) - 64-lane MinHash signature (xxhash64 seed 42)",
-      es => MinHashSig(es.head))
-    inject("vec_dot", classOf[VecDot],
-      "vec_dot(array<float|double>, array<float|double>) - sequential-fold dot product",
-      es => VecDot(es(0), es(1)))
-    inject("simhash64", classOf[SimHash64],
-      "simhash64(array<string>) - 64-bit SimHash of a token bag",
-      es => SimHash64(es.head))
-    inject("rolling_minhash", classOf[RollingMinHash],
-      "rolling_minhash(string) - winnowing min rolling-window hash",
-      es => RollingMinHash(es.head))
-    inject("mds_pairs", classOf[MdsPairs],
-      "mds_pairs(array<int>) - packed co-called pairs with squared copy diffs",
-      es => MdsPairs(es.head))
-    inject("sig_eq_count", classOf[SigEqCount],
-      "sig_eq_count(array<bigint>, array<bigint>) - equal MinHash lanes",
-      es => SigEqCount(es(0), es(1)))
-    // Spark's own (internal) bloom pair, exposed for d18's delta screen
-    inject("bloom_agg",
-      classOf[org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate],
-      "bloom_agg(xxhash64-long[, items[, bits]]) - Spark bloom filter build",
-      GraftFunctions.bloomAggBuilder)
-    inject("bloom_contains",
-      classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain],
-      "bloom_contains(binary, xxhash64-long) - bloom membership probe",
-      es => org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(es(0), es(1)))
-    inject("bloom_contains_tag", classOf[BloomContainsTag],
-      "bloom_contains_tag(bf-col, xxhash64-long, shard, 'tag') - " +
-        "sharded bloom probe (filter as a column, cached per (tag, shard))",
-      GraftFunctions.bloomContainsTagBuilder)
-    inject("bpe_count", classOf[BpeCount],
-      "bpe_count(string, merges_path) - exact byte-level BPE token count",
-      es => BpeCount(es(0), es(1)))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftFunctions.table.foreach(e => ext.injectFunction((e.id, e.info, e.builder)))
 }

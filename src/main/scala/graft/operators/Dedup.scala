@@ -5,7 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.functions.GraftFunctions
 
 /** Deduplication operators (SURVEY.md §2.3) — the four standard scales:
   * exact (hash group), MinHash+LSH (banded), SimHash (bit-chunk
@@ -52,7 +51,6 @@ object Dedup {
   def minhashSignatures(docs: DataFrame): DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
-    GraftFunctions.register(s)
     docs
       .select($"doc_id", split($"text", " ").as("toks"))
       .filter(size($"toks") >= 3)
@@ -149,7 +147,6 @@ object Dedup {
     * bit-for-bit (see `oracle` below).
     */
   def d03(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     import s.implicits._
     d03Pairs(s, T(s, dir, "documents").select($"doc_id", $"text"))
   }
@@ -159,7 +156,6 @@ object Dedup {
     */
   def d03Pairs(s: SparkSession, docs: DataFrame): DataFrame = {
     import s.implicits._
-    GraftFunctions.register(s)
     val sh = docs.select($"doc_id", expr("simhash64(split(text, ' '))").as("sh"))
     val chunks = sh
       .select($"doc_id", $"sh", explode(expr("sequence(0, 3)")).as("c"))
@@ -225,7 +221,6 @@ object Dedup {
   private def gramCandidateJoin(docsIn: DataFrame): DataFrame = {
     val s = docsIn.sparkSession
     import s.implicits._
-    GraftFunctions.register(s)
     // One cut, one spread, one kernel pass (minhashPairs' recipe for
     // the gram stage): `grams` is referenced THREE ways below (the
     // explode feeding the candidate join and both exact-verify sides
@@ -530,7 +525,6 @@ object Dedup {
     */
   private[graft] def d05At(s: SparkSession, dir: String, np: Int): DataFrame = {
     import s.implicits._
-    GraftFunctions.register(s)
     // squared norm HOISTED to one column per vector: the confirm ran
     // THREE vec_dots per candidate pair, but a·a and b·b are per-vector
     // constants — computing them once per row cuts the pair loop (the
@@ -565,7 +559,6 @@ object Dedup {
     */
   def d05Exact(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    GraftFunctions.register(s)
     val e = Scale.spread(T(s, dir, "embeddings"), $"vec_id")
       .select($"vec_id", $"embedding",
         expr("vec_dot(embedding, embedding)").as("n2"))
@@ -598,7 +591,6 @@ object Dedup {
     */
   def d08(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    GraftFunctions.register(s)
     val docs = T(s, dir, "documents")
       .select($"doc_id", split($"text", " ").as("toks"))
     decontaminate(
@@ -612,7 +604,6 @@ object Dedup {
     */
   def decontaminate(corpus: DataFrame, benchmark: DataFrame, n: Int): DataFrame = {
     import corpus.sparkSession.implicits._
-    GraftFunctions.register(corpus.sparkSession)
     val bench = benchmark
       .select(explode(expr(s"shingles(toks, $n)")).as("g")).distinct()
     corpus
@@ -994,7 +985,6 @@ object Dedup {
   def d11Scan(s: SparkSession, dir: String,
       model: org.apache.spark.ml.clustering.KMeansModel): DataFrame = {
     import s.implicits._
-    GraftFunctions.register(s)
     import org.apache.spark.ml.functions.array_to_vector
     // spread the under-split scan so assignment + the cell self-join's
     // cosine kernel run at cluster parallelism (no-op at scale)
@@ -1070,7 +1060,6 @@ object Dedup {
     */
   def d13(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    GraftFunctions.register(s)
     // spread the under-split scan before the shingle explode: the
     // (source, gh) partial agg's ENTIRE map side (explode + md5 + 79 MB
     // of shuffle write at the sf1 probe) ran as one task (no-op at
@@ -1230,7 +1219,6 @@ object Dedup {
     */
   def d16(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    GraftFunctions.register(s)
     val grams = T(s, dir, "documents")
       .select($"doc_id", split($"text", " ").as("w"))
       .filter(size($"w") >= 3)
@@ -1625,7 +1613,6 @@ object Dedup {
     */
   def d18(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    GraftFunctions.register(s)
     val docs = T(s, dir, "documents").withColumn("h", md5($"text"))
     val baseKeys = docs.filter($"doc_id" % 2 === 0).select($"h").distinct()
     // One row, one bounded binary. lit() as the probe's DIRECT child
@@ -1711,7 +1698,6 @@ object Dedup {
   def d19Screen(s: SparkSession, dir: String, nShards: Long,
       totalItems: Long, totalBits: Long): DataFrame = {
     import s.implicits._
-    GraftFunctions.register(s)
     // plan-construction-unique cache tag: a (tag, shard) cache entry
     // can never outlive its plan's meaning
     val tag = java.util.UUID.randomUUID().toString
@@ -2065,7 +2051,6 @@ object Dedup {
   private def gramSets(docs: DataFrame): DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
-    GraftFunctions.register(s)
     docs
       .select($"doc_id", split($"text", " ").as("w"))
       .withColumn("gs", expr("shingles(w, 2)"))

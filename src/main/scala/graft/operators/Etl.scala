@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.Tables
-import graft.functions.GraftFunctions
 import graft.sources.VcfReader
 
 /** The reference's ETL surface (SURVEY.md §2.2), Spark-first.
@@ -330,7 +329,6 @@ object Etl {
     */
   def e08(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    GraftFunctions.register(s)
     T(s, dir, "lineitem")
       .groupBy($"l_orderkey")
       .agg(sort_array(collect_list(struct($"l_linenumber",

@@ -1198,8 +1198,8 @@ object Relational {
     // key rows (not payloads) across the cluster first — parallelism
     // derived from the cluster (defaultParallelism), never a constant,
     // so the same plan fills 8 local cores or a thousand executor
-    // slots. The shuffle moves ~16 bytes/row; the chain costs ~30
-    // md5s/row — three orders of magnitude apart.
+    // slots. The shuffle moves ~16 bytes/row; the chain costs
+    // PseudoRounds × PseudoPurposes md5s/row (64 × 3 = 192).
     Scale.spread(T(s, dir, "lineitem")
       .select($"l_returnflag", $"l_orderkey", $"l_linenumber"),
       $"l_orderkey")

@@ -60,7 +60,6 @@ object Similarity {
   /** s01: exact cosine top-k — brute force over a broadcast query set. */
   def s01(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     // squared norms hoisted per side: the scan ran three vec_dots per
     // (corpus row × query) — n2/qn2 are per-row constants, so one dot
     // per scored row remains. sqrt(n2 * qn2) keeps the multiplication
@@ -162,9 +161,7 @@ object Similarity {
     else df.sample(withReplacement = false, budget.toDouble / n, seed)
   }
 
-  /** Random-hyperplane sign bucket of an embedding column (caller must
-    * have GraftFunctions registered — vec_dot resolves by name).
-    */
+  /** Random-hyperplane sign bucket of an embedding column. */
   private[operators] def bucketCol(emb: String, np: Int): Column = {
     val bits = (0 until np).map { j =>
       val p = typedLit(plane(j, Dims))
@@ -232,7 +229,6 @@ object Similarity {
     */
   def s12(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     // squared norms hoisted per side (s01's fix) — the label-gated scan
     // still scores corpus-scale row counts, cosines bit-identical
     val emb = T(s, dir, "embeddings")
@@ -272,7 +268,6 @@ object Similarity {
     */
   def s11(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val quant = T(s, dir, "embeddings")
       .withColumn("e", $"embedding".cast("array<double>"))
       .withColumn("scale", expr("array_max(transform(e, x -> abs(x)))"))
@@ -321,7 +316,6 @@ object Similarity {
     */
   def s14(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val np = nPlanesOf(s, dir)
     val quant = T(s, dir, "embeddings")
       .withColumn("e", $"embedding".cast("array<double>"))
@@ -377,7 +371,6 @@ object Similarity {
   private def lshCand(s: SparkSession, dir: String, maxHamming: Int,
       np: Int): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val emb = T(s, dir, "embeddings")
     val corpus = emb.select($"vec_id", $"embedding", bucketCol("embedding", np).as("bucket"))
     val probes = probeMasks(np, maxHamming)
@@ -425,7 +418,6 @@ object Similarity {
   def s03Scan(s: SparkSession, dir: String,
       model: org.apache.spark.ml.clustering.KMeansModel): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     import org.apache.spark.ml.functions.array_to_vector
     val nProbe = 2
     val emb = T(s, dir, "embeddings")
@@ -525,7 +517,9 @@ object Similarity {
           t.setDaemon(true); t })
       implicit val ec: scala.concurrent.ExecutionContext =
         scala.concurrent.ExecutionContext.fromExecutor(pool)
-      val group = "graft-s04-fit"
+      // unique per call: a shared group name would let one call's
+      // cancel kill a concurrent call's fits
+      val group = s"graft-s04-fit-${java.util.UUID.randomUUID()}"
       try {
         val fits = (0 until M).map { m =>
           scala.concurrent.Future {
@@ -549,8 +543,13 @@ object Similarity {
       } finally {
         pool.shutdown()
         // don't unpersist fitDf under still-running fit jobs (they
-        // would silently fall back to recomputing the sample)
-        pool.awaitTermination(60, java.util.concurrent.TimeUnit.SECONDS)
+        // would silently fall back to recomputing the sample): fits
+        // still running after the wait are cancelled, then awaited
+        val sec = java.util.concurrent.TimeUnit.SECONDS
+        if (!pool.awaitTermination(60, sec)) {
+          s.sparkContext.cancelJobGroup(group)
+          pool.awaitTermination(60, sec)
+        }
       }
     } finally fitDf.unpersist(blocking = false)
   }
@@ -562,7 +561,6 @@ object Similarity {
   def s04Scan(s: SparkSession, dir: String,
       models: Seq[org.apache.spark.ml.clustering.KMeansModel]): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val nCand = 3 * K              // ADC candidates re-ranked exactly
     val emb = T(s, dir, "embeddings")
     val withSubs = withSubVectors(emb)
@@ -620,7 +618,6 @@ object Similarity {
     */
   def s05(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     // squared norms hoisted per side (s01's fix) — one dot per scored
     // row on the full corpus scan, cosines bit-identical
     val emb = T(s, dir, "embeddings")
@@ -766,7 +763,6 @@ object Similarity {
     */
   def s13(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val np = nPlanesOf(s, dir)
     val occ = T(s, dir, "embeddings")
       .select(bucketCol("embedding", np).as("bucket"))
@@ -807,7 +803,6 @@ object Similarity {
     */
   def s15(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val np = nPlanesOf(s, dir)
     val b = T(s, dir, "embeddings")
       .select($"vec_id", bucketCol("embedding", np).as("bucket"))
@@ -890,7 +885,6 @@ object Similarity {
     */
   def s17(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val np = nPlanesOf(s, dir)
     val occ = T(s, dir, "embeddings")
       .select(bucketCol("embedding", np).as("bucket"))
@@ -945,7 +939,6 @@ object Similarity {
       * one key space.
       */
     def merge(delta: DataFrame): VecIndex = {
-      graft.functions.GraftFunctions.register(buckets.sparkSession)
       VecIndex(buckets.unionByName(delta.select(col("vec_id"),
         col("embedding"), bucketCol("embedding", nPlanes).as("bucket"))),
         nPlanes)
@@ -967,7 +960,6 @@ object Similarity {
     def probe(queries: DataFrame, maxHamming: Int = 1, k: Int = K): DataFrame = {
       val s = buckets.sparkSession
       import s.implicits._
-      graft.functions.GraftFunctions.register(s)
       val probes = probeMasks(nPlanes, maxHamming)
       val q = queries
         .select($"vec_id".as("q_id"), $"embedding".as("q_emb"),
@@ -989,7 +981,6 @@ object Similarity {
   object VecIndex {
     /** Builds at the auto-sized geometry for THIS corpus (one count). */
     def build(emb: DataFrame): VecIndex = {
-      graft.functions.GraftFunctions.register(emb.sparkSession)
       val np = nPlanesFor(emb.count())
       VecIndex(emb.select(col("vec_id"), col("embedding"),
         bucketCol("embedding", np).as("bucket")), np)
@@ -1294,7 +1285,6 @@ object Similarity {
     */
   def s06(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val np = nPlanesOf(s, dir)
     // spread the under-split scan so the bucket/cosine kernels run at
     // cluster parallelism (no-op at scale — see Scale.spread; round-15
@@ -1350,7 +1340,6 @@ object Similarity {
     */
   def s07(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     // squared norms hoisted (s01's fix): the vector's per-row, the
     // cell sum's per-bucket on the broadcast side — one dot per scored
     // row instead of three, centrality bit-identical
@@ -1400,7 +1389,6 @@ object Similarity {
     */
   def s08(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     // squared norms hoisted per vector (s01's fix): one dot per scored
     // row / candidate pair instead of three — bit-identical micro-cosines
     val emb = T(s, dir, "embeddings")

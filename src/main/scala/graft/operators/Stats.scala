@@ -103,7 +103,6 @@ object Stats {
                    samples: Seq[String],
                    maxSites: Option[Int] = None): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val sites = maxSites match {
       case Some(k) =>
         val key =

@@ -5,7 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.functions.GraftFunctions
 
 /** Text-analysis operators for training-data pipelines (SURVEY.md §2.3):
   * language-ID heuristic, quality scoring, token stats, content
@@ -119,7 +118,6 @@ object Text {
     */
   def t05(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    GraftFunctions.register(s)
     T(s, dir, "documents")
       .select($"doc_id", expr("rolling_minhash(text)").as("fp"))
       .orderBy($"doc_id")
@@ -360,7 +358,6 @@ object Text {
     * any (text) frame — the filter signals CurateCorpus cuts on.
     */
   def qualitySignals(df: DataFrame): DataFrame = {
-    GraftFunctions.register(df.sparkSession)
     df.withColumn("q_score", expr(scoreExpr))
       .withColumn("q_dup3", expr(
         "1.0e0 - CAST(size(shingles(split(text, ' '), 3)) AS DOUBLE) / " +
@@ -400,7 +397,6 @@ object Text {
     */
   def t09(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    GraftFunctions.register(s)
     T(s, dir, "documents")
       .select($"doc_id", split($"text", " ").as("toks"))
       .select($"doc_id",
@@ -1152,7 +1148,6 @@ object Text {
     */
   def t29(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    GraftFunctions.register(s)
     val grams = T(s, dir, "documents")
       .select($"doc_id", explode(expr("shingles(split(text, ' '), 3)")).as("g"))
     val first = grams.groupBy($"g").agg(min($"doc_id").as("first_doc"))
@@ -1335,7 +1330,6 @@ object Text {
     */
   def t33(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    GraftFunctions.register(s)
     val grams = T(s, dir, "documents")
       .select($"doc_id", explode(expr("shingles(split(text, ' '), 3)")).as("g"))
     val df = grams.groupBy($"g").agg(count(lit(1)).as("df"))

@@ -4,6 +4,7 @@ import java.util.{Map => JMap}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
@@ -48,18 +49,8 @@ class VcfDataSource extends TableProvider with DataSourceRegister {
     }.sorted.toSeq
   }
 
-  private def headerLines(path: String): Vector[String] = {
-    val hp = new Path(path)
-    val fs = FileSystem.get(hp.toUri, SparkSession.active.sessionState.newHadoopConf())
-    val in = fs.open(hp)
-    try {
-      val reader = new java.io.BufferedReader(new java.io.InputStreamReader(
-        VcfIo.maybeGunzip(path, in), "UTF-8"))
-      Iterator.continually(reader.readLine())
-        .takeWhile(l => l != null && l.startsWith("#"))
-        .toVector
-    } finally in.close()
-  }
+  private def headerLines(path: String): Vector[String] =
+    VcfIo.headerLines(path, SparkSession.active.sessionState.newHadoopConf())
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
     // `header` names a VCF (file or exported shard dir) whose ## header
@@ -607,6 +598,21 @@ private[sources] object VcfIo {
     if (path.endsWith(".gz") || path.endsWith(".bgz"))
       new java.util.zip.GZIPInputStream(in, 1 << 16)
     else in
+
+  /** The `#`-prefixed header lines at the start of a VCF, gunzipped when
+    * the path says so: a bounded driver-side read, not a scan.
+    */
+  def headerLines(path: String, hadoopConf: Configuration): Vector[String] = {
+    val hp = new Path(path)
+    val in = FileSystem.get(hp.toUri, hadoopConf).open(hp)
+    try {
+      val reader = new java.io.BufferedReader(new java.io.InputStreamReader(
+        maybeGunzip(path, in), "UTF-8"))
+      Iterator.continually(reader.readLine())
+        .takeWhile(l => l != null && l.startsWith("#"))
+        .toVector
+    } finally in.close()
+  }
 }
 
 private[sources] class VcfReaderFactory(headerLines: Vector[String],

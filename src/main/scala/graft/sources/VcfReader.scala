@@ -346,27 +346,15 @@ object VcfReader {
     (h, variants(h, body), maybeImpacts(spark, h, body))
   }
 
-  /** Reads a VCF file path: header via a driver-side bounded read of the
-    * `#`-prefix (through Hadoop FileSystem + transparent gunzip, the same
-    * path the DSv2 source uses — spark.read.textFile decompresses `.gz`
-    * bodies, so the header read must too or a compressed input would
-    * silently parse garbage header bytes into an empty schema), body as
-    * a distributed text scan.
+  /** Reads a VCF file path: header via `VcfIo.headerLines`, the same
+    * bounded, gunzipping read the DSv2 source uses (spark.read.textFile
+    * decompresses `.gz` bodies, so the header read must too or a
+    * compressed input would silently parse garbage header bytes into an
+    * empty schema), body as a distributed text scan.
     */
   def fromPath(spark: SparkSession, path: String): (Header, DataFrame, DataFrame) = {
     import spark.implicits._
-    val hp = new org.apache.hadoop.fs.Path(path)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      hp.toUri, spark.sessionState.newHadoopConf())
-    val in = fs.open(hp)
-    val headerLines =
-      try {
-        val reader = new java.io.BufferedReader(new java.io.InputStreamReader(
-          VcfIo.maybeGunzip(path, in), "UTF-8"))
-        Iterator.continually(reader.readLine())
-          .takeWhile(l => l != null && l.startsWith("#"))
-          .toVector
-      } finally in.close()
+    val headerLines = VcfIo.headerLines(path, spark.sessionState.newHadoopConf())
     require(headerLines.exists(_.startsWith("#CHROM")),
       s"$path: no #CHROM header line — not a VCF (or header not at file start)")
     val h = parseHeader(headerLines)

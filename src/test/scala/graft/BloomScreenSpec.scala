@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.GraftFunctions
 import graft.operators.Dedup
 
 /** Pins d18's bloom screen: the filter must have ZERO false negatives
@@ -23,7 +22,6 @@ class BloomScreenSpec extends SparkSpec {
 
   private def baseBloomBytes: Array[Byte] = {
     import spark.implicits._
-    GraftFunctions.register(spark)
     docsWithHash.filter($"doc_id" % 2 === 0).select($"h").distinct()
       .agg(call_function("bloom_agg", xxhash64($"h"),
         lit(100000L), lit(800000L)).as("bf"))
@@ -74,7 +72,6 @@ class BloomScreenSpec extends SparkSpec {
 
   test("d19 per-shard filters have zero false negatives over their shard") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val tag = java.util.UUID.randomUUID().toString
     val base = docsWithHash.filter($"doc_id" % 2 === 0).select($"h").distinct()
       .withColumn("shard", pmod(xxhash64($"h"), lit(Dedup.D19Shards)))

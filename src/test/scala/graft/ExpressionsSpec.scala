@@ -6,8 +6,23 @@ import graft.functions.GraftFunctions
 
 class ExpressionsSpec extends SparkSpec {
 
-  test("registered functions run inside SQL and round-trip") {
+  test("one table of 17 functions, installed by the session's extension") {
+    val names = GraftFunctions.table.map(_.name)
+    assert(names.size == 17 && names.distinct.size == 17)
+    // no spec calls register before this lookup, so each hit is the
+    // GraftExtensions install GraftSession.build wires in
+    val reg = spark.sessionState.functionRegistry
+    GraftFunctions.table.foreach { e =>
+      assert(reg.lookupFunction(e.id).exists(i => Option(i.getUsage).exists(_.nonEmpty)),
+        s"${e.name} is not installed with a usage string")
+    }
+    val before = reg.listFunction().size
     GraftFunctions.register(spark)
+    GraftFunctions.register(spark)
+    assert(reg.listFunction().size == before)
+  }
+
+  test("registered functions run inside SQL and round-trip") {
     val row = spark.sql(
       """SELECT zlib_unpack(zlib_pack(array(1, 2, 3, -4))) AS rt,
         |       simhash64(array('a', 'b')) AS sh,
@@ -19,7 +34,6 @@ class ExpressionsSpec extends SparkSpec {
   }
 
   test("expressions survive codegen over a real column") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val df = (1 to 100).map(i => (i.toLong, s"document number $i with some shared text"))
       .toDF("id", "text")
@@ -32,7 +46,6 @@ class ExpressionsSpec extends SparkSpec {
   }
 
   test("minhash_sig is bit-identical to the interpreted HOF formulation") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     // the second half forces EVERY 3-gram shingle into 32..63 bytes —
     // XXH64's one-stripe path, exactly the slice the DuckDB oracle
@@ -56,7 +69,6 @@ class ExpressionsSpec extends SparkSpec {
   }
 
   test("sig_eq_count is bit-identical to the zip_with/filter/size chain") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     // real signatures over a corpus with genuine near-dups, so the
     // equal-lane counts span the whole 0..64 range
@@ -85,7 +97,6 @@ class ExpressionsSpec extends SparkSpec {
   }
 
   test("shingles(toks, n) matches the HOF formulation for size >= n") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val df = (1 to 200).map(i =>
       (i.toLong, s"shingle test doc $i repeated shingle test doc ${i / 2} tail"))
@@ -102,7 +113,6 @@ class ExpressionsSpec extends SparkSpec {
   }
 
   test("vec_dot is bit-identical to the aggregate/zip_with fold") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val df = (1 to 100).map { i =>
       (i.toLong, Array.tabulate(64)(d => (math.sin(i * 64 + d) * 10).toFloat))
@@ -114,7 +124,6 @@ class ExpressionsSpec extends SparkSpec {
   }
 
   test("mistyped arguments fail analysis, not at runtime") {
-    graft.functions.GraftFunctions.register(spark)
     def fails(sql: String): Unit = {
       val e = intercept[Exception](spark.sql(sql).collect())
       assert(e.isInstanceOf[org.apache.spark.sql.AnalysisException] ||
@@ -129,7 +138,6 @@ class ExpressionsSpec extends SparkSpec {
   }
 
   test("null array elements are rejected by pack, tolerated by simhash") {
-    graft.functions.GraftFunctions.register(spark)
     val e = intercept[Exception](
       spark.sql("SELECT zlib_pack(array(1, CAST(NULL AS INT)))").collect())
     assert(e.getMessage.contains("null array element"))
@@ -141,7 +149,6 @@ class ExpressionsSpec extends SparkSpec {
   }
 
   test("mds_pairs packs co-called pairs, skips unknowns and nulls") {
-    graft.functions.GraftFunctions.register(spark)
     def unpack(v: Long) = ((v >> 40).toInt, ((v >> 16) & 0xffffff).toInt,
       (v & 0xffff).toInt)
     // gt_types: s0=hom_ref(0), s1=het(1), s2=unknown(2), s3=hom_alt(3),
@@ -161,7 +168,6 @@ class ExpressionsSpec extends SparkSpec {
   }
 
   test("a non-integral shingles n is rejected, not truncated") {
-    graft.functions.GraftFunctions.register(spark)
     val e = intercept[Exception](
       spark.sql("SELECT shingles(array('a','b','c'), 2.9)").collect())
     assert(e.getMessage.contains("integer literal"))

@@ -37,11 +37,18 @@ class VcfDataSourceSpec extends SparkSpec {
   }
 
   test("fromPath distributed text-scan path agrees with the v2 source") {
-    val (_, viaReader, _) = graft.sources.VcfReader.fromPath(spark, vcfPath)
-    val viaV2 = spark.read.format("vcf").load(vcfPath)
-    val a = viaReader.select("chrom", "pos", "alt", "aaf").orderBy("chrom", "pos", "alt").collect()
-    val b = viaV2.select("chrom", "pos", "alt", "aaf").orderBy("chrom", "pos", "alt").collect()
-    assert(a.toSeq == b.toSeq)
+    // the gzipped copy reads its header through the same gunzip as the body
+    val gz = Files.createTempDirectory("vcfsrcgz").resolve("fixture.vcf.gz")
+    val out = new java.util.zip.GZIPOutputStream(Files.newOutputStream(gz))
+    out.write(Files.readAllBytes(java.nio.file.Paths.get(vcfPath))); out.close()
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("chrom", "pos", "alt", "aaf").orderBy("chrom", "pos", "alt").collect().toSeq
+    val viaV2 = rows(spark.read.format("vcf").load(vcfPath))
+    Seq(vcfPath, gz.toString).foreach { p =>
+      val (h, viaReader, _) = graft.sources.VcfReader.fromPath(spark, p)
+      assert(h.samples.nonEmpty, s"$p: header not read")
+      assert(rows(viaReader) == viaV2, p)
+    }
   }
 }
 
